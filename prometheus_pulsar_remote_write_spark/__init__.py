@@ -19,6 +19,12 @@ Layout:
     sources/      -- wire-edge codecs (snappy, prompb) and decode operators
     streaming/    -- the produce/consume Structured Streaming pipelines
     plans/        -- the query catalog exposed through __spark_entry__.py
+    zipcache      -- keeps Python workers from re-reading pyspark.zip
+                     on every task (installed on import)
 """
 
+from .zipcache import keep_unchanged_zip_directories
+
 __version__ = "0.1.0"
+
+keep_unchanged_zip_directories()

@@ -69,11 +69,13 @@ HTTP_WRITE_REQUEST_SCHEMA = T.StructType(
 )
 
 #: Serialized wire message (what a Pulsar message carries): the partition
-#: key (reference pkg/pulsar/serializers.go:91-114) plus the payload.
+#: key (reference pkg/pulsar/serializers.go:91-114) plus the payload, and
+#: the tenant as a message property.
 WIRE_MESSAGE_SCHEMA = T.StructType(
     [
-        T.StructField("key", T.StringType(), False),
-        T.StructField("payload", T.StringType(), False),
+        T.StructField("key", T.StringType(), True),
+        T.StructField("payload", T.StringType(), True),
+        T.StructField("tenant_id", T.StringType(), True),
     ]
 )
 
@@ -130,9 +132,3 @@ def load_tables(spark, sf_dir: str, names: list[str] | None = None) -> dict:
                 df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         out[name] = df
     return out
-
-
-def register_views(spark, sf_dir: str, names: list[str] | None = None) -> None:
-    """Register the testdata tables as temp views for spark.sql queries."""
-    for name, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(name)

@@ -52,19 +52,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..schema import WIRE_MESSAGE_SCHEMA
+from .http_listener import TENANT_DIR_NONE
+
 BLOB_SCHEMA = StructType(
     [
         StructField("path", StringType(), False),
         StructField("tenant_dir", StringType(), True),
         StructField("content", BinaryType(), True),
-    ]
-)
-
-MESSAGE_SCHEMA = StructType(
-    [
-        StructField("key", StringType(), True),
-        StructField("payload", StringType(), True),
-        StructField("tenant_id", StringType(), True),
     ]
 )
 
@@ -90,8 +85,11 @@ def _list_blobs(root: str) -> list[tuple[int, str]]:
 
 
 def _tenant_of(path: str, root: str) -> str | None:
+    """The blob's tenant directory; None for a tenant-less blob (spooled
+    under ``TENANT_DIR_NONE``, or at the spool root)."""
     rel = os.path.relpath(os.path.dirname(path), root)
-    return None if rel == "." else rel.split(os.sep)[0]
+    tenant = None if rel == "." else rel.split(os.sep)[0]
+    return None if tenant == TENANT_DIR_NONE else tenant
 
 
 @dataclass
@@ -240,7 +238,7 @@ class MessageBusSink(DataSource):
         return "message_bus"
 
     def schema(self):
-        return MESSAGE_SCHEMA
+        return WIRE_MESSAGE_SCHEMA
 
     def writer(self, schema, overwrite: bool):
         return _MessageBusWriter(self.options["path"])

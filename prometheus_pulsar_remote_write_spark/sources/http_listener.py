@@ -6,7 +6,8 @@ that receives snappy(proto(WriteRequest)) bodies and answers 400 on
 undecodable input (reference pkg/app/produce.go:124-181); the tenant is
 taken from the Basic Auth username or the X-Scope-OrgID header
 (pkg/context/handlers.go:8-40). Here the accepted body is spooled as
-``<spool>/<tenant>/<blob>`` (atomic temp+rename; dot-prefixed temp names
+``<spool>/<tenant>/<blob>`` (``<spool>/no-tenant/<blob>`` without a
+tenant; atomic temp+rename; dot-prefixed temp names
 are invisible to the source's listing), which is exactly the layout
 ``sources/datasource.py`` streams -- so a stock Prometheus can
 remote-write at this listener and the Spark pipeline consumes it with no
@@ -55,6 +56,12 @@ def max_connection_age_headers(
         return [("Connection", "close")]
     return []
 
+#: The spool layout is <spool>/<tenant>/<request>.bin; a request without a
+#: tenant lands in this reserved directory, which is therefore never a
+#: valid tenant name. It must NOT start with '_' or '.' (Spark's file
+#: index treats those as hidden metadata, e.g. _SUCCESS, and skips them).
+TENANT_DIR_NONE = "no-tenant"
+
 # Tenant names become one path component under the spool, so the charset is
 # restricted the same way Cortex/Mimir restrict tenant IDs: a bare token, no
 # separators, never "." or "..".  Anything else is a 400 (never a silent
@@ -69,7 +76,7 @@ def tenant_is_safe(tenant: str) -> bool:
     """True iff ``tenant`` is safe to use as a single spool path component."""
     if not _TENANT_RE.fullmatch(tenant):
         return False
-    if tenant in (".", ".."):
+    if tenant in (".", "..", TENANT_DIR_NONE):
         return False
     return True
 
@@ -218,7 +225,7 @@ class RemoteWriteListener:
                         outer.rejected += 1
                     self._finish(400)
                     return
-                target_dir = os.path.join(spool, tenant) if tenant else spool
+                target_dir = os.path.join(spool, tenant or TENANT_DIR_NONE)
                 # belt-and-braces: the resolved dir must stay under the spool
                 spool_real = os.path.realpath(spool)
                 if not os.path.realpath(target_dir).startswith(spool_real + os.sep) and os.path.realpath(target_dir) != spool_real:

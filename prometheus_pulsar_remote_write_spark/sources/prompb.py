@@ -70,20 +70,6 @@ def _int64_to_varint(n: int) -> bytes:
     return _write_varint(n)
 
 
-def _skip_field(data: bytes, pos: int, wire_type: int) -> int:
-    if wire_type == 0:  # varint
-        _, pos = _read_varint(data, pos)
-        return pos
-    if wire_type == 1:  # fixed64
-        return pos + 8
-    if wire_type == 2:  # length-delimited
-        length, pos = _read_varint(data, pos)
-        return pos + length
-    if wire_type == 5:  # fixed32
-        return pos + 4
-    raise ValueError(f"prompb: unsupported wire type {wire_type}")
-
-
 def _fields(data: bytes):
     """Yield (field_number, wire_type, value_bytes_or_int) over a message."""
     pos = 0

@@ -62,12 +62,6 @@ def parse_samples(messages: DataFrame, fmt: str = "json") -> DataFrame:
     )
 
 
-def split_poison(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
-    good = parsed.filter(F.col("timestamp").isNotNull()).drop("payload")
-    poison = parsed.filter(F.col("timestamp").isNull()).select("payload")
-    return good, poison
-
-
 def build_write_request_bodies(batch_df: DataFrame) -> list:
     """B2/B3 + A4 encode: one WriteRequest body per (tenant, batch_seq).
 

@@ -6,11 +6,21 @@ tenant -> serialize -> partition key -> async Pulsar publish -> Flush.
 
 Spark shape:
     readStream(binaryFile drop-dir)        # A1: the HTTP edge lands bodies
-      -> decode_remote_write               # snappy+proto (mapInPandas)
-      -> with_tenant                       # B4 (coalesce auth columns)
-      -> flatten_write_requests            # B1 (explode, JVM-side)
-      -> serialize + partition key         # C1-C3 + B7/B8
+      -> tenant_from_path                  # B4 (spool layout <tenant>/<body>)
+      -> produce_transform                 # ONE mapInPandas per body batch:
+                                           #   snappy+proto decode, B1
+                                           #   flatten, C1-C3 serialize,
+                                           #   B7/B8 partition key
       -> writeStream.foreachBatch(publisher)  # A2; batch commit == Flush
+
+One Python pass per trigger: a Python task has a fixed start-up cost
+that dwarfs a small body's per-sample work, so decode, flatten, key and
+serialize share one ``mapInPandas`` node instead of a decode node plus
+an ``ArrowEvalPython`` node for the key and payload UDFs. The column
+stages (``decode_remote_write`` -> ``flatten_write_requests`` ->
+``partition_key_col`` + ``serialize_col``) remain the building blocks of
+``flat_sample_stream`` (the lake sink) and produce byte-identical
+messages.
 
 Delivery: foreachBatch + checkpointing give at-least-once, the same
 contract the reference offers (ack-after-send). A failed publish raises,
@@ -18,31 +28,27 @@ the micro-batch is not committed, and Spark replays it -- which is also
 the backpressure story (D5): a stalled sink halts intake.
 
 At scale the drop-dir is any landing zone (object store, Kafka of blobs);
-maxFilesPerTrigger bounds per-batch work, and everything downstream of
-decode is narrow until the optional repartition on the partition key.
+maxFilesPerTrigger bounds per-batch work, and the whole produce path is
+narrow until the optional repartition on the partition key.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
+from typing import Iterator
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.fnv import partition_key_col
-from ..functions.serializers import serialize_col
+from ..functions.fnv import sample_partition_key
+from ..functions.serializers import resolve_marshaler
 from ..operators.flatten import flatten_write_requests
-from ..operators.tenant import tenant_from_auth
+from ..schema import DEFAULT_REPLICA_LABELS, WIRE_MESSAGE_SCHEMA
+from ..sources import prompb, snappy_codec
+from ..sources.http_listener import TENANT_DIR_NONE
 from ..sources.remote_write import decode_remote_write
-
-#: Tenant columns can ride next to each body file as a sidecar manifest;
-#: for the file-drop source we derive them from the directory layout:
-#: <root>/<tenant>/<request>.bin. Empty-tenant requests land in a reserved
-#: directory -- it must NOT start with '_' or '.' (Spark's file index
-#: treats those as hidden metadata, e.g. _SUCCESS, and skips them).
-TENANT_DIR_NONE = "no-tenant"
 
 
 def read_request_stream(
@@ -72,12 +78,13 @@ def tenant_from_path(path_col):
 def flat_sample_stream(bodies: DataFrame) -> DataFrame:
     """Body blobs -> flattened (timestamp, value, labels, tenant_id) rows.
 
-    The shared front half of the produce path (A1 decode -> B4 tenant ->
-    B1 flatten), before any serialization: the wire publisher and the
-    lake sink both consume this. Pure transformation -- works on batch or
-    streaming DataFrames alike. Bodies that already carry a ``tenant_id``
-    column (e.g. from the remote_write_blobs custom source) keep it;
-    otherwise the tenant derives from the file path."""
+    The front half of the produce path (A1 decode -> B4 tenant -> B1
+    flatten) as column stages, before any serialization: the lake sink
+    consumes this (``produce_transform`` fuses the same steps with the
+    key and payload into one Python pass). Pure transformation -- works
+    on batch or streaming DataFrames alike. Bodies that already carry a
+    ``tenant_id`` column (e.g. from the remote_write_blobs custom source)
+    keep it; otherwise the tenant derives from the file path."""
     if "tenant_id" not in bodies.columns:
         bodies = bodies.withColumn("tenant_id", tenant_from_path(F.col("path")))
     decoded = decode_remote_write(
@@ -94,30 +101,64 @@ def produce_transform(
     serializer_format: str = "json",
     replica_labels: list[str] | None = None,
 ) -> DataFrame:
-    """Body blobs -> (key, payload, tenant_id) wire messages."""
-    flat = flat_sample_stream(bodies)
-    return flat.select(
-        partition_key_col(
-            F.col("labels"), F.col("tenant_id"), replica_labels
-        ).alias("key"),
-        serialize_col(serializer_format).alias("payload"),
-        F.col("tenant_id"),
+    """Body blobs -> (key, payload, tenant_id) wire messages, in ONE
+    Python pass.
+
+    Per body: snappy decompress, proto decode, flatten (a repeated label
+    name keeps its last value, as the reference's label map does), then
+    per sample the partition key (``sample_partition_key``) and the
+    payload (``resolve_marshaler(serializer_format)``). An undecodable
+    body yields no messages. Tenant as in ``flat_sample_stream``."""
+    if "tenant_id" not in bodies.columns:
+        bodies = bodies.withColumn("tenant_id", tenant_from_path(F.col("path")))
+    marshal = resolve_marshaler(serializer_format)
+    replica = tuple(
+        replica_labels if replica_labels is not None else DEFAULT_REPLICA_LABELS
+    )
+
+    def _produce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            keys, payloads, tenants = [], [], []
+            for body, tenant_id in zip(pdf["content"], pdf["tenant_id"]):
+                try:
+                    req = prompb.decode_write_request(
+                        snappy_codec.decompress(bytes(body))
+                    )
+                except Exception:  # poison: the listener's 400 path
+                    continue
+                tenant = tenant_id if tenant_id is not None else ""
+                for ts in req["timeseries"]:
+                    labels = {l["name"]: l["value"] for l in ts["labels"]}
+                    key = sample_partition_key(labels, tenant, replica)
+                    for s in ts["samples"]:
+                        keys.append(key)
+                        payloads.append(
+                            marshal(s["timestamp"], s["value"], labels, tenant)
+                        )
+                        tenants.append(tenant_id)
+            if keys:
+                yield pd.DataFrame(
+                    {"key": keys, "payload": payloads, "tenant_id": tenants}
+                )
+
+    return bodies.select("content", "tenant_id").mapInPandas(
+        _produce, WIRE_MESSAGE_SCHEMA
     )
 
 
 class FilePublisher:
-    """A2 stand-in: publishes each micro-batch as JSONL part files keyed by
-    partition key (a Pulsar producer plugs in here; the per-batch commit is
-    the reference's Flush)."""
+    """A2 stand-in: publishes each micro-batch as (key, payload,
+    tenant_id) JSONL part files under ``<out_dir>/epoch=<id>/`` (a Pulsar
+    producer plugs in here; the per-batch commit is the reference's
+    Flush). No tenant partitioning: consumers take the tenant from the
+    payload, so per-tenant directories would only multiply the files."""
 
     def __init__(self, out_dir: str):
         self.out_dir = out_dir
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.write.mode("append")
-            .partitionBy("tenant_id")
-            .json(os.path.join(self.out_dir, f"epoch={epoch_id}"))
+        batch_df.write.mode("append").json(
+            os.path.join(self.out_dir, f"epoch={epoch_id}")
         )
 
 
@@ -300,14 +341,7 @@ def run_produce_pipeline_datasource(
         spark.readStream.format("remote_write_blobs")
         .option("path", drop_dir)
         .load()
-        .withColumn(
-            "tenant_id",
-            F.when(
-                F.col("tenant_dir").isNull()
-                | (F.col("tenant_dir") == TENANT_DIR_NONE),
-                F.lit(""),
-            ).otherwise(F.col("tenant_dir")),
-        )
+        .withColumn("tenant_id", F.coalesce(F.col("tenant_dir"), F.lit("")))
     )
     messages = produce_transform(bodies, serializer_format)
     writer = (

@@ -220,7 +220,7 @@ def test_http_listener_bridges_posts_into_blob_source(spark, tmp_path):
     auth = {"Authorization": "Basic " + base64.b64encode(b"tenant-a:pw").decode()}
     assert post(body("m1", 3), auth) == 200
     assert post(body("m2", 2), {"X-Scope-OrgID": "tenant-b"}) == 200
-    assert post(body("m3", 1)) == 200  # anonymous -> root spool
+    assert post(body("m3", 1)) == 200  # anonymous -> no-tenant dir
     assert post(b"not snappy at all") == 400
     assert post(body("m4", 1), path="/nope") == 404
     assert listener.accepted == 3 and listener.rejected == 1

@@ -271,6 +271,29 @@ def test_wire_serializers_compile_shuffle_and_python_free(spark):
             assert marker not in plan, f"{fn.__name__} fell off the codegen tier"
 
 
+def test_produce_plan_is_one_python_pass(spark, tmp_path):
+    """The wire produce path runs exactly ONE Python node (the fused
+    mapInPandas): no ArrowEvalPython for the key and payload UDFs, so
+    each body pays one Python task start-up, not two."""
+    import re
+
+    from prometheus_pulsar_remote_write_spark.streaming.produce import (
+        produce_transform,
+    )
+
+    (tmp_path / "tenant-a").mkdir()
+    (tmp_path / "tenant-a" / "r.bin").write_bytes(b"")
+    bodies = (
+        spark.read.format("binaryFile")
+        .option("recursiveFileLookup", "true")
+        .load(str(tmp_path))
+    )
+    plan = _plan(produce_transform(bodies))
+    python_nodes = re.findall(r"\b\w*(?:Python|InPandas|InArrow)\w*\b", plan)
+    assert python_nodes == ["MapInPandas"], plan
+    assert "ArrowEvalPython" not in plan
+
+
 def test_aqe_splits_skewed_join(spark):
     """Scale evidence for the skew story: with AQE skew-join enabled and
     thresholds sized to the fixture, a join against a pathologically
