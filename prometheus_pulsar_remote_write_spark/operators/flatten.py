@@ -28,7 +28,9 @@ def flatten_write_requests(df: DataFrame, extra_cols: list[str] | None = None) -
     """WriteRequest rows -> one row per (series, sample): B1.
 
     Input needs a ``timeseries`` column shaped like WRITE_REQUEST_SCHEMA.
-    ``extra_cols`` (e.g. tenant_id) are carried through unchanged.
+    ``extra_cols`` (e.g. tenant_id) are carried through unchanged. Label
+    names must be unique within a series (``decode_remote_write`` keeps
+    the last value of a repeated name).
     Narrow transformation: no shuffle, rows only expand within a partition.
     """
     extra = extra_cols or []

@@ -21,7 +21,6 @@ from __future__ import annotations
 import json
 import logging
 import re
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation
@@ -348,21 +347,6 @@ class DeliveryMetrics:
                 return
         self.duration_buckets[-1] += 1
         h["buckets"][-1] += 1
-
-    def time_send(self, tenant_id: str = ""):
-        """Context manager: times one POST into the histogram."""
-        metrics = self
-
-        class _Timer:
-            def __enter__(self):
-                self.t0 = time.monotonic()
-                return self
-
-            def __exit__(self, *exc):
-                metrics.observe_duration(time.monotonic() - self.t0, tenant_id)
-                return False
-
-        return _Timer()
 
     def exposition(self, remote: str = "remote") -> str:
         """Prometheus text exposition (format 0.0.4) of the reference's

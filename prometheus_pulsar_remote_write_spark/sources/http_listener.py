@@ -1,5 +1,5 @@
 """A1 transport: an HTTP remote-write listener bridging real POSTs into
-the blob spool that the ``remote_write_blobs`` DataSource reads.
+the body spool that the produce pipeline streams.
 
 This makes the sandbox analog literal: the reference runs an HTTP server
 that receives snappy(proto(WriteRequest)) bodies and answers 400 on
@@ -9,9 +9,10 @@ taken from the Basic Auth username or the X-Scope-OrgID header
 ``<spool>/<tenant>/<blob>`` (``<spool>/no-tenant/<blob>`` without a
 tenant; atomic temp+rename; dot-prefixed temp names
 are invisible to the source's listing), which is exactly the layout
-``sources/datasource.py`` streams -- so a stock Prometheus can
-remote-write at this listener and the Spark pipeline consumes it with no
-format shim.
+``streaming/produce.py:read_request_stream`` (a ``binaryFile`` stream)
+reads, with ``tenant_from_path`` taking the tenant from the directory --
+so a stock Prometheus can remote-write at this listener and the Spark
+pipeline consumes it with no format shim.
 
 Stdlib-only (http.server) and validation-first: the body must snappy-
 decompress and proto-parse before it is spooled, so poison never enters
@@ -94,7 +95,7 @@ def _tenant_from_headers(headers) -> str:
 
 
 class RemoteWriteListener:
-    """Minimal threaded remote-write receiver writing the blob spool.
+    """Minimal threaded remote-write receiver writing the body spool.
 
     Ops surface (the reference's web endpoints, pkg/app/app.go):
     ``POST /write`` / ``/api/v1/push`` ingest; ``GET /ready`` liveness;
@@ -234,8 +235,8 @@ class RemoteWriteListener:
                     self._finish(400)
                     return
                 os.makedirs(target_dir, exist_ok=True)
-                # .bin suffix: both the binaryFile produce source
-                # (pathGlobFilter *.bin) and the blob DataSource accept it
+                # .bin suffix: the binaryFile produce source reads
+                # only *.bin (pathGlobFilter)
                 name = f"{uuid.uuid4().hex}.bin"
                 tmp = os.path.join(target_dir, f".{name}")
                 with open(tmp, "wb") as fh:

@@ -10,10 +10,10 @@ request) -- split good/bad downstream.
 Egress (A4, reference pkg/remote/write.go:184-196): ``encode_remote_write``
 renders nested WriteRequest rows back to snappy(proto) bodies ready to POST.
 
-Both are Arrow-batched mapInPandas stages: narrow, no shuffle, scale with
-input partitions. The heavy lifting per row is pure-Python codec work,
-which is exactly the kind of per-record transcoding the reference also
-does once per request.
+Both are Arrow-batched stages (``mapInArrow`` / ``mapInPandas``): narrow,
+no shuffle, scale with input partitions. The heavy lifting per row is
+pure-Python codec work, which is exactly the kind of per-record
+transcoding the reference also does once per request.
 """
 
 from __future__ import annotations
@@ -21,6 +21,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -41,26 +42,44 @@ def _decoded_schema(keep_fields: list[T.StructField]) -> T.StructType:
 def decode_remote_write(
     df: DataFrame, body_col: str = "content", keep_cols: list[str] | None = None
 ) -> DataFrame:
-    """snappy(proto) bodies -> WriteRequest rows (+ decode_error for poison)."""
+    """snappy(proto) bodies -> WriteRequest rows (+ decode_error for poison).
+
+    Arrow in, Arrow out (``mapInArrow``): the nested timeseries are built
+    straight as Arrow arrays, so a NaN sample value (Prometheus' staleness
+    marker) stays NaN -- a pandas round trip would turn it into a null.
+    A label name repeated within one series keeps its last value, as the
+    reference's label map does, so ``flatten_write_requests`` can build
+    its label map."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
     keep_cols = keep_cols or []
-    out_schema = _decoded_schema([f for f in df.schema.fields if f.name in keep_cols])
+    keep_fields = [f for f in df.schema.fields if f.name in keep_cols]
+    out_schema = _decoded_schema(keep_fields)
     names = [f.name for f in out_schema.fields]
+    ts_type = to_arrow_type(out_schema["timeseries"].dataType)
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, body in enumerate(pdf[body_col]):
-                base = {c: pdf[c].iloc[i] for c in keep_cols}
+    def _decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            timeseries, errors = [], []
+            for body in batch.column(body_col).to_pylist():
                 try:
-                    raw = snappy_codec.decompress(bytes(body))
+                    raw = snappy_codec.decompress(body)
                     req = prompb.decode_write_request(raw)
-                    base.update(timeseries=req["timeseries"], decode_error=None)
+                    for ts in req["timeseries"]:
+                        last = {l["name"]: l["value"] for l in ts["labels"]}
+                        ts["labels"] = [{"name": n, "value": v} for n, v in last.items()]
+                    timeseries.append(req["timeseries"])
+                    errors.append(None)
                 except Exception as exc:  # 400-path: keep the poison visible
-                    base.update(timeseries=None, decode_error=str(exc))
-                rows.append(base)
-            yield pd.DataFrame(rows, columns=names)
+                    timeseries.append(None)
+                    errors.append(str(exc))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(f.name) for f in keep_fields]
+                + [pa.array(timeseries, ts_type), pa.array(errors, pa.string())],
+                names=names,
+            )
 
-    return df.mapInPandas(_decode, out_schema)
+    return df.mapInArrow(_decode, out_schema)
 
 
 def encode_remote_write(

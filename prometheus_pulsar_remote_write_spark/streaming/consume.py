@@ -67,10 +67,9 @@ def build_write_request_bodies(batch_df: DataFrame) -> list:
 
     Returns [(tenant_id, batch_seq, body_bytes, n_samples)]; the nest and
     label sort run distributed, only the final bodies come to the driver
-    (bounded: batch_size samples per body).
+    (bounded: batch_size samples per body). The sink uses it to write the
+    DLQ files of rejected batches.
     """
-    from ..operators.flatten import sorted_label_entries
-
     with_labels = batch_df.withColumn(
         "labels", F.from_json("labels_json", "map<string,string>")
     )
@@ -106,20 +105,18 @@ class RemoteWriteSink:
     for a real `requests.post` in production. 5xx/exception => Recoverable
     (raise, batch replays); 4xx => unrecoverable (DLQ, continue).
 
-    Default delivery is EXECUTOR-SIDE (``post_batches_distributed``): each
+    Delivery is EXECUTOR-SIDE (``post_batches_distributed``): each
     (tenant, batch) encodes and POSTs inside the partition that holds it,
     and only small status rows return to the driver -- the shape that
-    survives 1000 executors. ``distributed=False`` keeps the serial
-    driver-side loop for debugging (bounded but driver-resident).
-    ``post_fn`` must be picklable in distributed mode (cloudpickle ships
-    lambdas/closures fine; closure *mutations* stay on the executor).
+    survives 1000 executors. ``post_fn`` must therefore be picklable
+    (cloudpickle ships lambdas/closures fine; closure *mutations* stay on
+    the executor).
     """
 
     url: str
     dlq_dir: str
     post_fn: object = None
     batch_size: int = 100
-    distributed: bool = True
     send_timeout_s: float = 30.0  # reference --send-timeout (consume.go:40-41)
     user_agent: str = "prometheus-pulsar-remote-write-spark/0.1.0"
     sent: dict = field(default_factory=dict)   # tenant -> samples sent
@@ -138,22 +135,6 @@ class RemoteWriteSink:
         os.makedirs(self._ledger(), exist_ok=True)
         with open(self._marker(epoch_id, tenant_id, batch_seq), "w"):
             pass
-
-    def _post(self, tenant_id: str, body: bytes) -> int:
-        headers = {
-            "Content-Encoding": "snappy",
-            "Content-Type": "application/x-protobuf",
-            "User-Agent": self.user_agent,
-        }
-        if tenant_id:
-            headers["X-Scope-OrgID"] = tenant_id  # reference write.go:83-94
-        if self.post_fn is not None:
-            return self.post_fn(self.url, body, headers)
-        import requests
-
-        return requests.post(
-            self.url, data=body, headers=headers, timeout=self.send_timeout_s
-        ).status_code
 
     def _settled_pairs(self, epoch_id: int) -> set:
         """(tenant_id, batch_seq) pairs already 2xx'd or DLQ'd in a prior
@@ -177,63 +158,25 @@ class RemoteWriteSink:
         with open(os.path.join(self.dlq_dir, name), "wb") as fh:
             fh.write(body)
 
-    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        from .batcher import microbatch_batches
-
-        batched = microbatch_batches(batch_df, self.batch_size)
-        if self.distributed:
-            return self._deliver_distributed(batched, epoch_id)
-        for tenant_id, batch_seq, body, n in build_write_request_bodies(batched):
-            # A replayed micro-batch (after a RecoverableError aborted a
-            # previous attempt) must not re-POST batches that already got a
-            # 2xx or were DLQ'd: the reference only retains un-acked samples
-            # (write.go:208-236). batch_seq is deterministic per epoch
-            # (row_number over a stable sort), so the marker identifies the
-            # same batch across attempts.
-            if os.path.exists(self._marker(epoch_id, tenant_id, batch_seq)):
-                continue
-            if self.metrics is not None:
-                self.metrics.count_received(tenant_id, n)
-            try:
-                if self.metrics is not None:
-                    with self.metrics.time_send(tenant_id):
-                        status = self._post(tenant_id, body)
-                else:
-                    status = self._post(tenant_id, body)
-            except Exception as exc:  # transport error: recoverable
-                if self.metrics is not None:
-                    self.metrics.count_retry(tenant_id)
-                raise RecoverableError(str(exc))
-            if status >= 500:  # D5: recoverable -> replay micro-batch
-                if self.metrics is not None:
-                    self.metrics.count_retry(tenant_id)
-                raise RecoverableError(f"HTTP {status} for tenant {tenant_id!r}")
-            if status >= 400:  # D6: unrecoverable -> DLQ + continue
-                self._dlq_write(epoch_id, tenant_id, batch_seq, body)
-                self.failed[tenant_id] = self.failed.get(tenant_id, 0) + n
-                if self.metrics is not None:
-                    self.metrics.count_failed(tenant_id, n)
-                self._settle(epoch_id, tenant_id, batch_seq)  # ack-and-drop
-                continue
-            self.sent[tenant_id] = self.sent.get(tenant_id, 0) + n
-            if self.metrics is not None:
-                self.metrics.count_sent(tenant_id, n)
-            self._settle(epoch_id, tenant_id, batch_seq)
-
     def _key_expr(self):
         return F.concat_ws(
             "\x00", F.col("tenant_id"), F.col("batch_seq").cast("string")
         )
 
-    def _deliver_distributed(self, batched: DataFrame, epoch_id: int) -> None:
-        """The default delivery path: encode+POST on the executors
+    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
+        """D1 batch, encode+POST on the executors
         (``post_batches_distributed``), then apply the reference's D5/D6
-        policy on the returned status rows. Ledger semantics match the
-        driver loop: settled batches are filtered out BEFORE the POST wave,
-        successes/DLQs settle before any RecoverableError raises, so a
-        replayed micro-batch re-POSTs only un-acked batches
-        (write.go:208-236)."""
-        batched = batched.persist()
+        policy on the returned status rows. A replayed micro-batch (after
+        a RecoverableError aborted a previous attempt) must not re-POST
+        batches that already got a 2xx or were DLQ'd: the reference only
+        retains un-acked samples (write.go:208-236). So settled batches
+        are filtered out BEFORE the POST wave, and successes/DLQs settle
+        before any RecoverableError raises. batch_seq is deterministic
+        per epoch (row_number over a stable sort), so a ledger marker
+        identifies the same batch across attempts."""
+        from .batcher import microbatch_batches
+
+        batched = microbatch_batches(batch_df, self.batch_size).persist()
         try:
             settled = self._settled_pairs(epoch_id)
             todo = batched
@@ -446,30 +389,21 @@ def post_batches_distributed(
     url: str,
     user_agent: str = "prometheus-pulsar-remote-write-spark/0.1.0",
     post_fn=None,
-    batch_size: int = 100,
     send_timeout_s: float = 30.0,
 ) -> list:
     """D2 fan-out on EXECUTORS: encode + POST each (tenant, batch) inside
     the partition that holds it; only small per-batch status rows return
-    to the driver.
-
-    This is the scale path: the driver-side ``RemoteWriteSink.__call__``
-    collects bodies (fine at batch_size x tenants, the reference's own
-    working set), but at 1000-executor scale delivery must happen where
-    the data is. ``post_fn`` must be picklable; default is a per-worker
+    to the driver. At 1000-executor scale delivery must happen where the
+    data is. ``post_fn`` must be picklable; default is a per-worker
     singleton ``requests.Session`` (A5 connection reuse).
 
     Returns [(tenant_id, batch_seq, status, n_samples, elapsed_s)] sorted;
-    callers apply the same D5/D6 policy as the driver-side sink and feed
+    ``RemoteWriteSink`` applies the D5/D6 policy to them and feeds
     elapsed_s to the send-duration histogram.
     """
-    from ..operators.flatten import sorted_label_entries  # noqa: F401 (doc xref)
-
     import pandas as pd
 
     from pyspark.sql import types as T
-
-    from ..operators.flatten import nest_samples
 
     with_labels = batch_df.withColumn(
         "labels", F.from_json("labels_json", "map<string,string>")
@@ -542,15 +476,3 @@ def post_batches_distributed(
         for r in statuses
     )
 
-
-def apply_delivery_policy(statuses: list) -> tuple[int, list]:
-    """D5/D6 on distributed-post results: raise RecoverableError on any
-    5xx/transport status (micro-batch replays), return
-    (n_delivered_samples, dlq'd (tenant, batch_seq) list) otherwise."""
-    recoverable = [s for s in statuses if s[2] >= 500]
-    if recoverable:
-        t, b, code = recoverable[0][:3]
-        raise RecoverableError(f"HTTP {code} for tenant {t!r} batch {b}")
-    delivered = sum(s[3] for s in statuses if s[2] < 400)
-    dlq = [(s[0], s[1]) for s in statuses if 400 <= s[2] < 500]
-    return delivered, dlq

@@ -54,7 +54,12 @@ from ..sources.remote_write import decode_remote_write
 def read_request_stream(
     spark: SparkSession, drop_dir: str, max_files_per_trigger: int = 64
 ) -> DataFrame:
-    """A1 source: stream of raw remote-write bodies from a drop directory."""
+    """A1 source: stream of raw remote-write bodies from a drop directory.
+
+    Spark's file source remembers every file it has read instead of
+    keeping an mtime high-watermark, so a body the listener renames in
+    after a newer one was already read (rename keeps the write-time
+    mtime) is still read by a later trigger."""
     return (
         spark.readStream.format("binaryFile")
         # binaryFile's fixed schema; streaming sources require it explicitly
@@ -82,11 +87,9 @@ def flat_sample_stream(bodies: DataFrame) -> DataFrame:
     flatten) as column stages, before any serialization: the lake sink
     consumes this (``produce_transform`` fuses the same steps with the
     key and payload into one Python pass). Pure transformation -- works
-    on batch or streaming DataFrames alike. Bodies that already carry a
-    ``tenant_id`` column (e.g. from the remote_write_blobs custom source)
-    keep it; otherwise the tenant derives from the file path."""
-    if "tenant_id" not in bodies.columns:
-        bodies = bodies.withColumn("tenant_id", tenant_from_path(F.col("path")))
+    on batch or streaming DataFrames alike. The tenant derives from the
+    file path."""
+    bodies = bodies.withColumn("tenant_id", tenant_from_path(F.col("path")))
     decoded = decode_remote_write(
         bodies,
         body_col="content",
@@ -109,8 +112,7 @@ def produce_transform(
     per sample the partition key (``sample_partition_key``) and the
     payload (``resolve_marshaler(serializer_format)``). An undecodable
     body yields no messages. Tenant as in ``flat_sample_stream``."""
-    if "tenant_id" not in bodies.columns:
-        bodies = bodies.withColumn("tenant_id", tenant_from_path(F.col("path")))
+    bodies = bodies.withColumn("tenant_id", tenant_from_path(F.col("path")))
     marshal = resolve_marshaler(serializer_format)
     replica = tuple(
         replica_labels if replica_labels is not None else DEFAULT_REPLICA_LABELS
@@ -232,63 +234,6 @@ class BrokerPublisher:
         batch_df.foreachPartition(_send_partition)
 
 
-class FanoutError(Exception):
-    """Raised when one or more writers fail; carries their names
-    (the reference's joined error listing failed writers,
-    pkg/app/produce.go:166-180)."""
-
-    def __init__(self, failed: dict[str, Exception]):
-        self.failed = failed
-        names = ", ".join(sorted(failed))
-        super().__init__(f"failed to write to: {names}")
-
-
-class FanoutPublisher:
-    """D4: write every micro-batch to ALL configured writers concurrently,
-    then join per-writer errors (reference pkg/app/produce.go:150-181 --
-    goroutine per writer, WaitGroup, errors joined into one 500).
-
-    Each writer runs in its own thread against a persisted batch (the
-    batch plan is materialized once, not recomputed per writer). If any
-    writer fails, FanoutError names the failures and the micro-batch is
-    not committed -> Spark replays it; writers that succeeded will see the
-    replay again, the same at-least-once contract as the reference (a 500
-    makes Prometheus resend to every writer, including the ones that
-    already stored the data)."""
-
-    def __init__(self, writers: dict[str, object]):
-        self.writers = dict(writers)
-
-    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        import threading
-
-        batch_df.persist()
-        try:
-            batch_df.count()  # materialize once before the writer fan-out
-            errors: dict[str, Exception] = {}
-            lock = threading.Lock()
-
-            def _run(name: str, writer) -> None:
-                try:
-                    writer(batch_df, epoch_id)
-                except Exception as exc:  # noqa: BLE001 -- joined below
-                    with lock:
-                        errors[name] = exc
-
-            threads = [
-                threading.Thread(target=_run, args=(name, writer), daemon=True)
-                for name, writer in self.writers.items()
-            ]
-            for t in threads:
-                t.start()
-            for t in threads:
-                t.join()
-            if errors:
-                raise FanoutError(errors)
-        finally:
-            batch_df.unpersist()
-
-
 def run_produce_pipeline(
     spark: SparkSession,
     drop_dir: str,
@@ -318,40 +263,3 @@ def run_produce_pipeline(
         writer = writer.trigger(processingTime="1 second")
     return writer.start()
 
-
-def run_produce_pipeline_datasource(
-    spark: SparkSession,
-    drop_dir: str,
-    out_dir: str,
-    checkpoint_dir: str | None = None,
-    serializer_format: str = "json",
-    trigger_once: bool = True,
-):
-    """The produce pipeline on the CUSTOM data sources end to end:
-    ``remote_write_blobs`` streaming source (A1) -> produce_transform ->
-    ``message_bus`` streaming sink (A2, staged parts made visible only on
-    epoch commit = the reference's Flush)."""
-    from ..sources import datasource as custom_ds
-
-    custom_ds.register(spark)
-    checkpoint_dir = checkpoint_dir or os.path.join(
-        out_dir, f"_checkpoint-{uuid.uuid4().hex[:8]}"
-    )
-    bodies = (
-        spark.readStream.format("remote_write_blobs")
-        .option("path", drop_dir)
-        .load()
-        .withColumn("tenant_id", F.coalesce(F.col("tenant_dir"), F.lit("")))
-    )
-    messages = produce_transform(bodies, serializer_format)
-    writer = (
-        messages.writeStream.format("message_bus")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()

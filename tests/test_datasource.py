@@ -1,212 +1,105 @@
-"""Custom Python DataSource tests (SURVEY.md §2.A A1/A2): the
-remote_write_blobs source and message_bus sink drive the same wire bytes
-as the file-based pipelines, via spark.read/readStream/write/writeStream.
+"""The A1 spool edge: the HTTP remote-write listener that writes the
+spool, and the ``binaryFile`` stream (``read_request_stream``) with
+``tenant_from_path`` that the produce pipeline reads it through.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
 from pyspark.sql import functions as F
 
-from prometheus_pulsar_remote_write_spark.operators.flatten import flatten_write_requests
-from prometheus_pulsar_remote_write_spark.sources import datasource, prompb, snappy_codec
+from prometheus_pulsar_remote_write_spark.sources import prompb, snappy_codec
 from prometheus_pulsar_remote_write_spark.sources.remote_write import decode_remote_write
+from prometheus_pulsar_remote_write_spark.streaming.produce import (
+    read_request_stream,
+    tenant_from_path,
+)
 
 
-def _spool_body(path: str, n_samples: int) -> None:
+def _body(name: str, n_samples: int) -> bytes:
     req = {
         "timeseries": [
             {
-                "labels": [{"name": "__name__", "value": "up"}, {"name": "i", "value": str(i)}],
-                "samples": [{"value": float(i), "timestamp": 1000 + i}],
+                "labels": [{"name": "__name__", "value": name}],
+                "samples": [
+                    {"value": float(i), "timestamp": 1000 + i} for i in range(n_samples)
+                ],
             }
-            for i in range(n_samples)
         ]
     }
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "wb") as fh:
-        fh.write(snappy_codec.compress(prompb.encode_write_request(req)))
+    return snappy_codec.compress(prompb.encode_write_request(req))
 
 
-def test_blob_source_batch_read_and_decode(spark, tmp_path):
-    spool = str(tmp_path / "spool")
-    _spool_body(os.path.join(spool, "team-a", "req1.bin"), 3)
-    _spool_body(os.path.join(spool, "team-a", "req2.bin"), 2)
-    _spool_body(os.path.join(spool, "team-b", "req3.bin"), 4)
+def _drain_spool(spark, spool: str, checkpoint: str) -> list:
+    """One ``availableNow`` run of the produce source over ``spool``:
+    the (file name, tenant, decoded row) of every body it reads, in
+    trigger order. Reusing ``checkpoint`` resumes after the last run."""
+    seen = []
 
-    datasource.register(spark)
-    raw = spark.read.format("remote_write_blobs").option("path", spool).load()
-    assert raw.count() == 3
-    tenants = {r.tenant_dir for r in raw.select("tenant_dir").collect()}
-    assert tenants == {"team-a", "team-b"}
+    def collect(batch_df, _epoch_id):
+        decoded = decode_remote_write(
+            batch_df.withColumn("tenant_id", tenant_from_path(F.col("path"))),
+            keep_cols=["path", "tenant_id"],
+        )
+        for r in decoded.collect():
+            seen.append((os.path.basename(r["path"]), r["tenant_id"], r))
 
-    decoded = decode_remote_write(raw, body_col="content", keep_cols=["tenant_dir"])
-    samples = flatten_write_requests(decoded, ["tenant_dir"])
-    per_tenant = {
-        r.tenant_dir: r.n
-        for r in samples.groupBy("tenant_dir").agg(F.count("*").alias("n")).collect()
-    }
-    assert per_tenant == {"team-a": 5, "team-b": 4}
-
-
-def test_blob_source_streaming_picks_up_new_files(spark, tmp_path):
-    spool = str(tmp_path / "spool")
-    _spool_body(os.path.join(spool, "team-a", "req1.bin"), 2)
-
-    datasource.register(spark)
-    stream = (
-        spark.readStream.format("remote_write_blobs").option("path", spool).load()
-    )
-    q = (
-        stream.select("path", "tenant_dir", F.length("content").alias("n_bytes"))
-        .writeStream.format("memory")
-        .queryName("blobs")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if spark.sql("SELECT * FROM blobs").count() >= 1:
-                break
-            time.sleep(0.5)
-        assert spark.sql("SELECT * FROM blobs").count() == 1
-
-        # a newly spooled body must arrive in a later micro-batch
-        _spool_body(os.path.join(spool, "team-b", "req2.bin"), 1)
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if spark.sql("SELECT * FROM blobs").count() >= 2:
-                break
-            time.sleep(0.5)
-        rows = spark.sql("SELECT * FROM blobs").collect()
-        assert len(rows) == 2
-        assert {r.tenant_dir for r in rows} == {"team-a", "team-b"}
-        assert all(r.n_bytes > 0 for r in rows)
-    finally:
-        q.stop()
-
-
-def test_message_bus_batch_write_commit_visibility(spark, tmp_path):
-    out = str(tmp_path / "bus")
-    datasource.register(spark)
-    df = spark.createDataFrame(
-        [("k1", "p1", "a"), ("k2", "p2", "b"), ("k3", "p3", "a")],
-        "key string, payload string, tenant_id string",
-    ).repartition(2)
-    df.write.format("message_bus").option("path", out).mode("append").save()
-
-    files = os.listdir(out)
-    assert files and all(not f.startswith("_staged") for f in files)
-    rows = []
-    for f in files:
-        with open(os.path.join(out, f)) as fh:
-            rows += [json.loads(line) for line in fh]
-    assert {(r["key"], r["payload"], r["tenant_id"]) for r in rows} == {
-        ("k1", "p1", "a"),
-        ("k2", "p2", "b"),
-        ("k3", "p3", "a"),
-    }
-
-
-def test_message_bus_stream_write(spark, tmp_path):
-    out = str(tmp_path / "bus")
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    with open(os.path.join(src, "in.jsonl"), "w") as fh:
-        for i in range(5):
-            fh.write(json.dumps({"key": f"k{i}", "payload": f"p{i}", "tenant_id": "t"}) + "\n")
-
-    datasource.register(spark)
-    stream = spark.readStream.schema("key string, payload string, tenant_id string").json(src)
-    q = (
-        stream.writeStream.format("message_bus")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
+    (
+        read_request_stream(spark, spool)
+        .writeStream.foreachBatch(collect)
+        .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
+        .awaitTermination(120)
     )
-    q.awaitTermination(120)
-
-    rows = []
-    for f in os.listdir(out):
-        assert not f.startswith("_staged")
-        with open(os.path.join(out, f)) as fh:
-            rows += [json.loads(line) for line in fh]
-    assert {r["key"] for r in rows} == {f"k{i}" for i in range(5)}
+    return seen
 
 
-def test_produce_pipeline_on_custom_datasources(spark, tmp_path):
-    """Full A1->A2 on the custom formats: spooled wire bodies stream in
-    through remote_write_blobs, wire messages stream out through
-    message_bus -- no file-source workarounds anywhere."""
-    from prometheus_pulsar_remote_write_spark.streaming.produce import (
-        run_produce_pipeline_datasource,
-    )
+def test_spool_source_reads_a_body_renamed_in_after_a_newer_one(spark, tmp_path):
+    """The listener writes a dot-temp file and renames it; rename keeps
+    the write-time mtime, so two concurrent handlers can rename out of
+    mtime order. A body renamed in after a trigger already read a NEWER
+    body must still be read by a later trigger (a (mtime, path)
+    high-watermark offset would skip it and lose a body that got a
+    200)."""
+    spool = tmp_path / "spool" / "team-a"
+    spool.mkdir(parents=True)
+    ckpt = str(tmp_path / "ckpt")
+    now = time.time()
+    temp_a = spool / ".a.bin"
+    temp_a.write_bytes(_body("a", 1))
+    os.utime(temp_a, (now - 60, now - 60))
+    (spool / "b.bin").write_bytes(_body("b", 1))
+    os.utime(spool / "b.bin", (now, now))
 
-    spool = str(tmp_path / "spool")
-    out = str(tmp_path / "bus")
-    _spool_body(os.path.join(spool, "team-a", "r1.bin"), 3)
-    _spool_body(os.path.join(spool, "no-tenant", "r2.bin"), 2)
+    first = _drain_spool(spark, str(tmp_path / "spool"), ckpt)
+    assert [name for name, _t, _r in first] == ["b.bin"]
 
-    q = run_produce_pipeline_datasource(
-        spark, spool, out, checkpoint_dir=str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-
-    rows = []
-    for f in os.listdir(out):
-        if f.startswith("_"):
-            continue
-        with open(os.path.join(out, f)) as fh:
-            rows += [json.loads(line) for line in fh]
-    assert len(rows) == 5
-    tenants = {r["tenant_id"] for r in rows}
-    assert tenants == {"team-a", ""}
-    for r in rows:
-        payload = json.loads(r["payload"])
-        assert payload["metric"]["__name__"] == "up"
-        assert r["key"].startswith("hex ")
+    os.rename(temp_a, spool / "a.bin")
+    assert os.stat(spool / "a.bin").st_mtime < os.stat(spool / "b.bin").st_mtime
+    second = _drain_spool(spark, str(tmp_path / "spool"), ckpt)
+    assert [(name, t) for name, t, _r in second] == [("a.bin", "team-a")]
 
 
 def test_http_listener_bridges_posts_into_blob_source(spark, tmp_path):
     """A1 transport end-to-end: real HTTP remote-write POSTs (Basic Auth /
     X-Scope-OrgID / anonymous tenants, reference handlers.go semantics)
-    land in the blob spool, the remote_write_blobs batch read decodes
-    them, and a poison body is refused with 400 and never spooled."""
+    land in the spool, the produce source (binaryFile stream +
+    tenant_from_path) reads and decodes them, and a poison body is
+    refused with 400 and never spooled."""
     import base64
+    import urllib.error
     import urllib.request
 
-    from prometheus_pulsar_remote_write_spark.sources import prompb, snappy_codec
     from prometheus_pulsar_remote_write_spark.sources.http_listener import (
         RemoteWriteListener,
     )
-    from prometheus_pulsar_remote_write_spark.sources.remote_write import (
-        decode_remote_write,
-    )
 
-    datasource.register(spark)
     spool = str(tmp_path / "spool")
     listener = RemoteWriteListener(spool)
     host, port = listener.start()
-    url = f"http://{host}:{port}/write"
-
-    def body(name, n):
-        req = {
-            "timeseries": [
-                {
-                    "labels": [{"name": "__name__", "value": name}],
-                    "samples": [
-                        {"value": float(i), "timestamp": 1000 + i} for i in range(n)
-                    ],
-                }
-            ]
-        }
-        return snappy_codec.compress(prompb.encode_write_request(req))
 
     def post(data, headers=None, path="/write"):
         r = urllib.request.Request(
@@ -218,28 +111,22 @@ def test_http_listener_bridges_posts_into_blob_source(spark, tmp_path):
             return e.code
 
     auth = {"Authorization": "Basic " + base64.b64encode(b"tenant-a:pw").decode()}
-    assert post(body("m1", 3), auth) == 200
-    assert post(body("m2", 2), {"X-Scope-OrgID": "tenant-b"}) == 200
-    assert post(body("m3", 1)) == 200  # anonymous -> no-tenant dir
+    assert post(_body("m1", 3), auth) == 200
+    assert post(_body("m2", 2), {"X-Scope-OrgID": "tenant-b"}) == 200
+    assert post(_body("m3", 1)) == 200  # anonymous -> no-tenant dir
     assert post(b"not snappy at all") == 400
-    assert post(body("m4", 1), path="/nope") == 404
+    assert post(_body("m4", 1), path="/nope") == 404
     assert listener.accepted == 3 and listener.rejected == 1
     assert listener.accepted_by_tenant == {"tenant-a": 1, "tenant-b": 1, "": 1}
     listener.stop()
 
-    blobs = (
-        spark.read.format("remote_write_blobs").option("path", spool).load()
-    )
-    decoded = decode_remote_write(
-        blobs, body_col="content", keep_cols=["tenant_dir"]
-    )
-    rows = decoded.collect()
+    rows = [r for _n, _t, r in _drain_spool(spark, spool, str(tmp_path / "ckpt"))]
     assert len(rows) == 3 and all(r["decode_error"] is None for r in rows)
     by_tenant = {}
     for r in rows:
         n = sum(len(ts["samples"]) for ts in r["timeseries"])
-        by_tenant[r["tenant_dir"]] = by_tenant.get(r["tenant_dir"], 0) + n
-    assert by_tenant == {"tenant-a": 3, "tenant-b": 2, None: 1}
+        by_tenant[r["tenant_id"]] = by_tenant.get(r["tenant_id"], 0) + n
+    assert by_tenant == {"tenant-a": 3, "tenant-b": 2, "": 1}
 
 
 def test_http_listener_rejects_traversal_tenants(tmp_path):

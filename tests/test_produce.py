@@ -1,7 +1,7 @@
 """The produce pipeline's single Python pass (``produce_transform``):
-byte parity with the column stages, the repeated-label-name case the
-column stages cannot take, and the tenant-less path from the HTTP
-listener to the bus."""
+byte parity with the column stages (repeated label names and staleness
+markers included), a continuous query over a repeated label name, and
+the tenant-less path from the HTTP listener to the bus."""
 
 from __future__ import annotations
 
@@ -53,6 +53,8 @@ def _bodies_df(spark, files: dict):
     )
 
 
+_STALE_NAN = struct.unpack("<d", struct.pack("<Q", 0x7FF0000000000002))[0]
+
 _PARITY_FILES = {
     "tenant-a/r1.bin": _body(
         [
@@ -77,6 +79,14 @@ _PARITY_FILES = {
     "tenant-b/r3.bin": _body(
         [([("__name__", "up"), ("job", "api")], [(2.0, 5000), (3.0, 6000)])]
     ),
+    "tenant-b/r4.bin": _body(
+        [
+            # a repeated label name: the last value wins
+            ([("__name__", "up"), ("job", "a"), ("job", "b")], [(1.0, 7000)]),
+            # Prometheus' staleness marker, a NaN with a payload
+            ([("__name__", "up"), ("job", "c")], [(_STALE_NAN, 8000)]),
+        ]
+    ),
     "tenant-a/poison.bin": b"definitely-not-snappy-proto",
 }
 
@@ -97,17 +107,16 @@ def test_fused_pass_matches_column_stages(spark, fmt):
     got = Counter(tuple(r) for r in fused.collect())
     want = Counter(tuple(r) for r in staged.collect())
     assert got == want
-    assert sum(got.values()) == 12  # 9 samples in r1, 1 in r2, 2 in r3
+    assert sum(got.values()) == 14  # 9 samples in r1, 1 in r2, 2 each in r3, r4
     assert {t for _k, _p, t in got} == {"tenant-a", "tenant-b", ""}
 
 
 def test_fused_pass_publishes_a_staleness_marker(spark):
     """A NaN sample value (Prometheus' staleness marker) is published as
-    "NaN"; the column stages cannot carry it (decode_remote_write's
-    non-nullable value field turns NaN into a null and fails the task)."""
-    stale = struct.unpack("<d", struct.pack("<Q", 0x7FF0000000000002))[0]
+    "NaN", not dropped or nulled."""
     bodies = _bodies_df(
-        spark, {"tenant-a/r.bin": _body([([("__name__", "up")], [(stale, 1000)])])}
+        spark,
+        {"tenant-a/r.bin": _body([([("__name__", "up")], [(_STALE_NAN, 1000)])])},
     )
     (row,) = produce_transform(bodies).collect()
     assert json.loads(row["payload"])["value"] == [1, "NaN"]
@@ -116,8 +125,7 @@ def test_fused_pass_publishes_a_staleness_marker(spark):
 def test_fused_pass_keeps_the_last_value_of_a_repeated_label(spark, tmp_path):
     """A body repeating a label name (job=a, job=b) publishes one sample
     with job=b, as the reference's label map does, and a continuous
-    produce query keeps running (the column stages' map_from_entries
-    raises DUPLICATED_MAP_KEY instead)."""
+    produce query keeps running."""
     drop = tmp_path / "drop" / "tenant-a"
     drop.mkdir(parents=True)
     (drop / "dup.bin").write_bytes(

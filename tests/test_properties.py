@@ -330,63 +330,6 @@ def test_scrape_gap_fold_is_split_invariant(ts_list, cuts):
 
 
 @given(
-    n=st.integers(2, 300),
-    cuts=st.lists(st.integers(1, 299), max_size=5),
-    batch_size=st.sampled_from([7, 50, 100]),
-)
-@settings(max_examples=100, deadline=None)
-def test_batcher_is_split_invariant(n, cuts, batch_size):
-    """Feeding the same samples split across any sequence of calls must
-    flush identical (batch_seq, row) assignments as one feed -- the
-    size-trigger's cross-call buffer stitching."""
-    import numpy as np
-    import pandas as pd
-
-    import sys
-
-    from prometheus_pulsar_remote_write_spark.streaming.batcher import (
-        _make_batch_fn,
-    )
-
-    sys.path.insert(
-        0,
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    )
-    from scripts.bench_fold import _FakeBatchState
-
-    pdf = pd.DataFrame(
-        {
-            "timestamp": np.arange(n, dtype=np.int64),
-            "value": np.arange(n, dtype=np.float64) / 7.0,
-            "labels_json": np.asarray(["{}"] * n, dtype=object),
-        }
-    )
-    cuts = [c for c in cuts if c < n]
-
-    def run(bounds):
-        fn = _make_batch_fn(batch_size, 5000)
-        st_ = _FakeBatchState()
-        outs = []
-        for a, b in zip(bounds, bounds[1:]):
-            if b > a:
-                outs.extend(
-                    f
-                    for f in fn(("t",), iter([pdf.iloc[a:b]]), st_)
-                    if len(f)
-                )
-        if outs:
-            return pd.concat(outs, ignore_index=True), st_.get
-        return pd.DataFrame(), st_.get
-
-    whole, state_whole = run([0, n])
-    split, state_split = run([0] + sorted(cuts) + [n])
-    pd.testing.assert_frame_equal(whole, split, check_dtype=False)
-    # remaining buffers and sequence counter agree
-    assert list(state_whole[0]) == list(state_split[0])
-    assert state_whole[3] == state_split[3]
-
-
-@given(
     events=st.lists(
         st.tuples(
             st.integers(0, 10**9),
